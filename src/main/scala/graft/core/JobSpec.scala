@@ -18,6 +18,9 @@ import scala.jdk.CollectionConverters._
   *  - `numWorkers` / `workerAddrs` (`n_workers`, `worker_ipaddr_ports`) → executor
   *    topology; retained for config-file parity but not used by the engine (Spark's
   *    cluster manager owns executors).
+  *
+  * `unparsed` holds the integer keys whose config values are not integers, as
+  * (key, value); `validate()` reports them before any other check.
   */
 final case class JobSpec(
     numWorkers: Int,
@@ -26,11 +29,14 @@ final case class JobSpec(
     outputDir: String,
     numOutputs: Int,
     mapKilobytes: Int,
-    userId: String
+    userId: String,
+    unparsed: Seq[(String, String)] = Nil
 ) {
   /** Validation parity with reference `src/mapreduce_spec.h:51-64`. */
   def validate(): Either[String, JobSpec] = {
-    if (numWorkers <= 0) Left(s"n_workers must be > 0, got $numWorkers")
+    if (unparsed.nonEmpty)
+      Left(unparsed.map { case (k, v) => s"$k must be an integer, got '$v'" }.mkString("; "))
+    else if (numWorkers <= 0) Left(s"n_workers must be > 0, got $numWorkers")
     else if (workerAddrs.nonEmpty && workerAddrs.size != numWorkers)
       Left(s"n_workers=$numWorkers does not match ${workerAddrs.size} worker addresses")
     else if (numOutputs <= 0) Left(s"n_output_files must be > 0, got $numOutputs")
@@ -67,14 +73,18 @@ object JobSpec {
   def fromMap(kv: Map[String, String]): JobSpec = {
     def csv(k: String): Seq[String] =
       kv.get(k).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
+    val intKeys = Seq("n_workers", "n_output_files", "map_kilobytes")
+    // A non-integer value parses to 0 and is recorded, so validate() reports it.
+    def int(k: String): Int = kv.get(k).flatMap(_.toIntOption).getOrElse(0)
     JobSpec(
-      numWorkers = kv.get("n_workers").map(_.toInt).getOrElse(0),
+      numWorkers = int("n_workers"),
       workerAddrs = csv("worker_ipaddr_ports"),
       inputFiles = csv("input_files"),
       outputDir = kv.getOrElse("output_dir", ""),
-      numOutputs = kv.get("n_output_files").map(_.toInt).getOrElse(0),
-      mapKilobytes = kv.get("map_kilobytes").map(_.toInt).getOrElse(0),
-      userId = kv.getOrElse("user_id", "")
+      numOutputs = int("n_output_files"),
+      mapKilobytes = int("map_kilobytes"),
+      userId = kv.getOrElse("user_id", ""),
+      unparsed = intKeys.flatMap(k => kv.get(k).filter(_.toIntOption.isEmpty).map(k -> _))
     )
   }
 }

@@ -15,6 +15,10 @@ import scala.collection.concurrent.TrieMap
   * order, which is already nondeterministic across runs (worker scheduling), so the
   * portable contract is "unordered values, keys sorted in output" — documented in
   * SURVEY.md §7.3.
+  *
+  * A task may declare [[combinable]]: its `reduce` then also runs inside each map
+  * task over partial groups (the optional Combiner of the MapReduce paper, §4.3,
+  * "typically the same code" as reduce), so fewer pairs cross the shuffle.
   */
 trait MapReduceTask extends Serializable {
   /** One input record (line) → zero or more (key, value) pairs. */
@@ -22,6 +26,15 @@ trait MapReduceTask extends Serializable {
 
   /** One distinct key + all its values → zero or more (key, value) pairs. */
   def reduce(key: String, values: Iterator[String]): IterableOnce[(String, String)]
+
+  /** True if `reduce` may also run map-side on partial groups. Off by default. A
+    * task may turn it on only when all three hold:
+    *  - `reduce` is associative and commutative over its values;
+    *  - its output values are valid input values to itself;
+    *  - it emits only the key it was given (the runtime fails the task otherwise).
+    * A sum qualifies; a mean does not.
+    */
+  def combinable: Boolean = false
 }
 
 /** Registry keyed by `user_id`, the Spark-side analog of the reference's

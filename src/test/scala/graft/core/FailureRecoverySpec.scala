@@ -41,6 +41,38 @@ private object FlakyMap extends MapReduceTask {
     WordCount.reduce(key, values)
 }
 
+/** A combinable word count whose attempt-0 map tasks die on their third line.
+  * Each line emits four pairs, so with a combine cap of four pairs the buffer
+  * has flushed through `reduce` (and fed the shuffle writer) at least once
+  * before the failure; `flushesAtFailure` records, per failed task, how many
+  * map-side reduce calls it had made.
+  */
+private object FlakyCombiningMap extends MapReduceTask {
+  val linesSeen: TrieMap[(Int, Int, Int), Int] = TrieMap.empty
+  val reducesSeen: TrieMap[(Int, Int, Int), Int] = TrieMap.empty
+  val flushesAtFailure: TrieMap[(Int, Int, Int), Int] = TrieMap.empty
+  private def bump(m: TrieMap[(Int, Int, Int), Int], k: (Int, Int, Int)): Int =
+    m.updateWith(k)(c => Some(c.getOrElse(0) + 1)).get
+
+  override def combinable: Boolean = true
+  override def map(line: String): IterableOnce[(String, String)] = {
+    val tc = TaskContext.get()
+    if (tc != null && tc.attemptNumber() == 0) {
+      val k = (tc.stageId(), tc.partitionId(), tc.attemptNumber())
+      if (bump(linesSeen, k) == 3) {
+        flushesAtFailure.put(k, reducesSeen.getOrElse(k, 0))
+        throw new RuntimeException(s"injected combining-map failure, partition ${tc.partitionId()}")
+      }
+    }
+    WordCount.map(line)
+  }
+  override def reduce(key: String, values: Iterator[String]): IterableOnce[(String, String)] = {
+    val tc = TaskContext.get()
+    if (tc != null) bump(reducesSeen, (tc.stageId(), tc.partitionId(), tc.attemptNumber()))
+    WordCount.reduce(key, values)
+  }
+}
+
 /** O9 — failure semantics (SURVEY.md §5 item 5; reference
   * `description.md:85-86`, `src/master.h:234-256`): a failed task attempt is
   * retried, and the retry produces NO duplicate output. The reference's
@@ -78,13 +110,22 @@ class FailureRecoverySpec extends AnyFunSuite {
   }
 
   private def runJob(spark: SparkSession, task: MapReduceTask, id: String, in: java.nio.file.Path): Seq[String] = {
+    val out = runJobDir(spark, task, id, in)
+    (0 until 4).flatMap(r => Files.readAllLines(out.resolve(s"${id}_result_$r")).asScala).sorted
+  }
+
+  private def runJobDir(
+      spark: SparkSession,
+      task: MapReduceTask,
+      id: String,
+      in: java.nio.file.Path,
+      combineCap: Option[Int] = None
+  ): java.nio.file.Path = {
     val out = Files.createTempDirectory(s"o9-out-$id")
     TaskRegistry.register(id, task)
-    MapReduceJob.run(
-      spark,
-      JobSpec(1, Seq("localhost:1"), Seq(in.toString), out.toString, 4, 500, id)
-    )
-    (0 until 4).flatMap(r => Files.readAllLines(out.resolve(s"${id}_result_$r")).asScala).sorted
+    val spec = JobSpec(1, Seq("localhost:1"), Seq(in.toString), out.toString, 4, 500, id)
+    combineCap.fold(MapReduceJob.run(spark, spec))(MapReduceJob.run(spark, spec, _))
+    out
   }
 
   test("reduce task failing once per attempt is retried; output has no duplicates (O9)") {
@@ -109,6 +150,26 @@ class FailureRecoverySpec extends AnyFunSuite {
       val clean = runJob(spark, WordCount, "o9clean2", in)
       val flaky = runJob(spark, FlakyMap, "o9flakymap", in)
       assert(flaky == clean)
+    }
+  }
+
+  test("combining map task failing after a buffer flush is retried; files byte-identical (O9)") {
+    withRetrySession { spark =>
+      val in = Files.createTempDirectory("o9-in-comb").resolve("input.txt")
+      Files.writeString(in, lines.mkString("\n"))
+      val cleanDir = runJobDir(spark, WordCount, "o9clean3", in)
+      FlakyCombiningMap.linesSeen.clear()
+      FlakyCombiningMap.reducesSeen.clear()
+      FlakyCombiningMap.flushesAtFailure.clear()
+      val flakyDir = runJobDir(spark, FlakyCombiningMap, "o9flakycomb", in, combineCap = Some(4))
+      assert(FlakyCombiningMap.flushesAtFailure.nonEmpty, "failure injection never ran")
+      assert(FlakyCombiningMap.flushesAtFailure.values.forall(_ > 0),
+        s"a map task died before its buffer flushed: ${FlakyCombiningMap.flushesAtFailure}")
+      (0 until 4).foreach { r =>
+        val clean = Files.readAllBytes(cleanDir.resolve(s"o9clean3_result_$r")).toSeq
+        val flaky = Files.readAllBytes(flakyDir.resolve(s"o9flakycomb_result_$r")).toSeq
+        assert(flaky == clean, s"result file $r differs")
+      }
     }
   }
 

@@ -4,6 +4,8 @@ import graft.SparkSpec
 import graft.core.{JobSpec, MapReduceJob, TaskRegistry}
 import graft.functions.TypedAggregators
 import java.nio.file.Files
+import org.apache.spark.sql.execution.MapPartitionsExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import scala.jdk.CollectionConverters._
 
 class MonthlyStatsSpec extends SparkSpec {
@@ -40,6 +42,20 @@ class MonthlyStatsSpec extends SparkSpec {
     assert(got == Map(
       "2001-03" -> (("15.0000", "20.00", "2")),
       "2001-04" -> (("5.0000", "7.50", "2"))
+    ))
+  }
+
+  test("a mean is not re-reducible: the executed plan has no map-side combine") {
+    assert(!MonthlyStats.combinable)
+    val reduced = MapReduceJob.reduceSorted(
+      MapReduceJob.mapPhase(spark.createDataset(lines), MonthlyStats), MonthlyStats, 2)
+    val plan = reduced.queryExecution.executedPlan
+    val funcs = new AdaptiveSparkPlanHelper {}.collect(plan) { case m: MapPartitionsExec => m.func }
+    assert(funcs.size == 2, plan) // the flatMap'd map UDF and the sorted reduce
+    assert(!funcs.exists(_.isInstanceOf[MapReduceJob.MapSideCombine]), plan)
+    assert(reduced.collect().toMap == Map(
+      "2001-03" -> "15.0000 20.00 2",
+      "2001-04" -> "5.0000 7.50 2"
     ))
   }
 
