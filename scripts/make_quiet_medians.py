@@ -9,7 +9,7 @@ given runs. Only runs taken on a quiet JVM with flat control medians should
 be fed in — the file is the REFERENCE the bench's self-healing reread pass
 compares against (Bench.RereadFactor / RereadSlackSec), so an inflated
 reference would mask real regressions. Provenance (which runs, when) goes
-into the `_provenance` key and README "Performance measurement notes".
+into the `_provenance` key.
 """
 import json
 import statistics

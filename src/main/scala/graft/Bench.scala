@@ -96,7 +96,7 @@ object Bench {
   val MaxRereads = 24
 
   /** Quiet-JVM reference file text (flat JSON at the repo root, provenance
-    * in its `_provenance` key and README "Performance measurement notes").
+    * in its `_provenance` key, built by `scripts/make_quiet_medians.py`).
     * Read leniently — absent or unreadable file means empty text, never a
     * failed bench.
     */

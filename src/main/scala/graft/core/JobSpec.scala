@@ -21,6 +21,10 @@ import scala.jdk.CollectionConverters._
   *
   * `unparsed` holds the integer keys whose config values are not integers, as
   * (key, value); `validate()` reports them before any other check.
+  *
+  * `validate()` rejects an empty `output_dir` but, unlike the reference (which
+  * `stat`s it, `src/mapreduce_spec.h:61-62`), does not require the directory to
+  * exist: the Spark sink creates it.
   */
 final case class JobSpec(
     numWorkers: Int,
@@ -42,6 +46,7 @@ final case class JobSpec(
     else if (numOutputs <= 0) Left(s"n_output_files must be > 0, got $numOutputs")
     else if (mapKilobytes <= 0) Left(s"map_kilobytes must be > 0, got $mapKilobytes")
     else if (userId.isEmpty) Left("user_id must be non-empty")
+    else if (outputDir.isEmpty) Left("output_dir must be non-empty")
     else if (inputFiles.isEmpty) Left("input_files must be non-empty")
     else
       inputFiles.find(f => !Files.isReadable(Paths.get(f))) match {

@@ -208,6 +208,10 @@ object MapReduceJob {
       .select(concat_ws(" ", col("_1"), col("_2")))
       .write
       .mode(SaveMode.Overwrite)
+      // One part file per reduce partition, whatever the session's
+      // spark.sql.files.maxRecordsPerFile: a split partition writes c000,
+      // c001, … and the second rename onto the same result file fails.
+      .option("maxRecordsPerFile", 0L)
       .text(outputDir)
     // Rename part files to the reference's result-file naming, via the Hadoop
     // FileSystem API (works on any FS the sink wrote to, not just local).

@@ -59,21 +59,14 @@ object Changes {
     * the unique order key, so the winner is deterministic even when two
     * orders share a date.
     */
-  def latestPerKey(log: DataFrame): DataFrame = latestPerKey(log, pin = true)
-
-  /** [[latestPerKey]] with the distribution pin as an explicit knob ONLY
-    * for [[graft.tools.CdProbe]]'s one-variable cost attribution — scoped
-    * `private[graft]` like [[applyLatest]]/[[scd2History]] so the public
-    * API cannot be called with the AQE-coalescing pin disabled.
-    */
-  private[graft] def latestPerKey(log: DataFrame, pin: Boolean): DataFrame = {
+  def latestPerKey(log: DataFrame): DataFrame = {
     val w = Window.partitionBy("key").orderBy(col("ts").desc, col("seq").desc)
     // Pinned key distribution (REPARTITION_BY_NUM): the changelog is
     // byte-light but window-sort heavy, exactly the shape AQE's size-based
     // coalescing runs on one task (profiled: the whole MERGE plan collapsed
     // to single-task stages at sf0.1). Satisfies the window's required
     // distribution, so no extra exchange is planned.
-    (if (pin) log.transform(Dedup.spreadKeys("key")) else log)
+    log.transform(Dedup.spreadKeys("key"))
       .withColumn("rk", row_number().over(w)).filter(col("rk") === 1).drop("rk")
   }
 
@@ -82,43 +75,31 @@ object Changes {
     * inserts. One window on the changelog + one full-outer equi-join on the
     * key — the standard distributed MERGE plan.
     */
-  def applyChangelog(base: DataFrame, log: DataFrame): DataFrame =
-    applyLatest(base, log, pin = true, sort = false)
-
-  /** The full cd_apply_changelog plan with CdProbe's attribution knobs
-    * (the spreadKeys pin and the gate-output sort). ONE definition serves
-    * the production query and every probe variant, so the probe can no
-    * longer drift from the plan it attributes (ADVICE r12); CdProbeSpec
-    * additionally pins probe-full ≡ production structurally.
-    */
-  private[graft] def applyLatest(base: DataFrame, log: DataFrame,
-      pin: Boolean, sort: Boolean): DataFrame = {
-    val latest = latestPerKey(log, pin)
-    val merged = base.join(latest, base("c_custkey") === latest("key"), "full_outer")
+  def applyChangelog(base: DataFrame, log: DataFrame): DataFrame = {
+    val latest = latestPerKey(log)
+    base.join(latest, base("c_custkey") === latest("key"), "full_outer")
       .filter(col("op").isNull || col("op") =!= "D")
       .select(
         coalesce(col("c_custkey"), col("key")).as("c_custkey"),
         coalesce(col("c_name"), concat(lit("cust#"), col("key"))).as("c_name"),
         when(col("op").isNotNull, col("new_bal")).otherwise(col("c_acctbal")).as("c_acctbal"))
-    if (sort) merged.orderBy("c_custkey") else merged
   }
 
-  /** The full cd_scd2_history plan with the same attribution knobs — see
-    * [[applyLatest]]; production is `pin = true, sort = true`.
+  /** SCD type-2 history of the U events, sorted for the gate output:
+    * one window per key over (ts, seq), `valid_to` is the next event's ts.
     */
-  private[graft] def scd2History(log: DataFrame, pin: Boolean, sort: Boolean): DataFrame = {
+  private[graft] def scd2History(log: DataFrame): DataFrame = {
     val updates = log.filter(col("op") === "U")
-    val pinned =
-      if (pin) updates.transform(Dedup.spreadKeys("key")) // same AQE-coalescing pin as latestPerKey
-      else updates
+      .transform(Dedup.spreadKeys("key")) // same AQE-coalescing pin as latestPerKey
     val w = Window.partitionBy("key").orderBy(col("ts").asc, col("seq").asc)
-    val core = pinned.select(
+    updates.select(
       col("key").as("c_custkey"),
       col("new_bal").as("bal"),
       col("ts").as("valid_from"),
       lead(col("ts"), 1).over(w).as("valid_to"),
       col("seq"))
-    (if (sort) core.orderBy("c_custkey", "valid_from", "seq") else core).drop("seq")
+      .orderBy("c_custkey", "valid_from", "seq")
+      .drop("seq")
   }
 
   /** Snapshot diff: rows only in `newer` → added, only in `older` → removed,
@@ -174,8 +155,7 @@ object Changes {
     // changelog to `customer` with latest-wins conflict resolution.
     "cd_apply_changelog" -> { (s, dir) =>
       // Through the public MERGE façade (+ the gate output sort), so the
-      // library entry point is itself gate-exercised; CdProbeSpec pins this
-      // plan-equal to applyLatest(pin = true, sort = true).
+      // library entry point is itself gate-exercised.
       applyChangelog(
         Relational.t(s, dir, "customer"),
         changelog(Relational.t(s, dir, "orders")))
@@ -185,7 +165,7 @@ object Changes {
     // SCD type-2: balance history per customer with [valid_from, valid_to)
     // effective ranges; the current row has valid_to NULL. One window.
     "cd_scd2_history" -> { (s, dir) =>
-      scd2History(changelog(Relational.t(s, dir, "orders")), pin = true, sort = true)
+      scd2History(changelog(Relational.t(s, dir, "orders")))
     },
 
     // Snapshot diff summarized per op (per-row ops are the same plan

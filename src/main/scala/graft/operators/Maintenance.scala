@@ -98,11 +98,8 @@ object Maintenance {
     k
   }
 
-  /** The three phases of mt_compact_partitioned as named builders — ONE
-    * definition each serves the gate query (which composes all three) and
-    * [[graft.tools.TailProbe]]'s per-phase cost attribution (the
-    * CdProbe/DqProbe no-drift discipline; TailProbeSpec pins the composed
-    * report's plan ≡ production). The gate's cost is two full table writes
+  /** The three phases of mt_compact_partitioned as named builders, which
+    * the gate query composes. The gate's cost is two full table writes
     * plus a pruned read: fragmentation is the test FIXTURE (a deployment
     * already has the fragmented tree), compaction is the OPERATOR, the
     * report is the content/pruning PROOF.

@@ -112,10 +112,7 @@ object Spatial {
         .filter(col("n_neighbors") >= MinPts))
 
   /** The core-core radius edge set (undirected, a < b), RAM-materialized —
-    * the shared root of every DBSCAN CC level and the node set. ONE
-    * definition serves the geo_dbscan gate query and
-    * [[graft.tools.TailProbe]]'s stage decomposition (the CdProbe/DqProbe
-    * no-drift discipline).
+    * the shared root of every DBSCAN CC level and the node set.
     */
   private[graft] def dbscanCorePairs(s: SparkSession, dir: String): DataFrame = {
     val cores = coreStore(s, dir).select(col("id"))

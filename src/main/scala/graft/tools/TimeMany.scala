@@ -12,7 +12,8 @@ import graft.SparkEntry
   */
 object TimeMany {
   def main(args: Array[String]): Unit = {
-    // Names AND dir REQUIRED — same rule as the probe mains (ADVICE r14).
+    // Names AND dir REQUIRED (ADVICE r14): a machine-specific default dir
+    // silently timed the wrong (or a missing) tree on another checkout.
     if (args.length < 2) {
       System.err.println("usage: TimeMany <name,name,...> <sfDir>")
       sys.exit(2)

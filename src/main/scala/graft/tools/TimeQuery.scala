@@ -7,7 +7,8 @@ import graft.SparkEntry
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
-    // Name AND dir REQUIRED — same rule as the probe mains (ADVICE r14).
+    // Name AND dir REQUIRED (ADVICE r14): a machine-specific default dir
+    // silently timed the wrong (or a missing) tree on another checkout.
     if (args.length < 2) {
       System.err.println("usage: TimeQuery <name> <sfDir> [explain] [noop]")
       sys.exit(2)

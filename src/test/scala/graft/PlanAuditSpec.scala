@@ -642,10 +642,10 @@ class PlanAuditSpec extends SparkSpec {
     // (ev_cuped's per-user `arms` aggregation ran twice; rt_df_histogram's
     // grand-total cross join re-executed rt_df_incremental's entire
     // stale+delta merge), and its clearance was README prose + a manual
-    // tool until this test. This is tools/RescanAudit's walk as a
-    // regression pin: count each CORPUS parquet location's scan nodes in
-    // every initial physical plan; a table scanned ≥2× must sit within the
-    // allowlist below — the r12-reviewed set, each row a DELIBERATE
+    // tool until this test. This is a regression pin: count each CORPUS
+    // parquet location's scan nodes in every initial physical plan; a
+    // table scanned ≥2× must sit within the allowlist below — the
+    // r12-reviewed set, each row a DELIBERATE
     // multi-scan of a column-pruned raw table, never an unmaterialized
     // expensive derived tier. Stored-structure re-reads (tmp parquet) are
     // NOT gated: re-reading a stored artifact is cheap by design. A new
@@ -690,8 +690,9 @@ class PlanAuditSpec extends SparkSpec {
         "supplier.parquet" -> 3, "customer.parquet" -> 3, "nation.parquet" -> 6),
       "q34_setops_all" -> Map("orders.parquet" -> 4),
       // Per-constraint / per-expectation audits: one pruned scan per
-      // declared rule (the shared-scan restructure was A/B'd SLOWER at
-      // gate scale and rejected — README "Performance measurement notes"):
+      // declared rule (a shared-scan restructure of dq_referential, one
+      // chained scan per child table, was A/B'd SLOWER at gate scale —
+      // 3.1–3.3 s vs 2.5 s — and rejected; OPTIMIZATION_r19.md):
       "dq_erasure" -> Map("customer.parquet" -> 3, "orders.parquet" -> 2),
       "dq_expectations" -> Map(
         "lineitem.parquet" -> 2, "documents.parquet" -> 3, "orders.parquet" -> 4),
@@ -723,10 +724,10 @@ class PlanAuditSpec extends SparkSpec {
     // exists for; observed < allowed means a row went STALE (the plan got
     // better), and keeping the over-generous cap would silently re-admit
     // up to cap scans later — tighten the row instead. The walk itself is
-    // RescanAudit's (one definition, no tool-vs-gate drift).
+    // StaleStructureContract.scanLocations (one definition for both pins).
     for (name <- SparkEntry.queries.keys.toSeq.sorted) {
       val p = plan(name)
-      val corpus = graft.tools.RescanAudit.scanLocations(p).filter(_.contains(dir))
+      val corpus = StaleStructureContract.scanLocations(p).filter(_.contains(dir))
         .map(_.split('/').last).groupBy(identity).view.mapValues(_.size).toMap
       for ((table, n) <- corpus if n >= 2) {
         val cap = allowed.getOrElse(name, Map.empty).getOrElse(table, 1)

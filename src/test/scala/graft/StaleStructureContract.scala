@@ -21,10 +21,20 @@ package graft
   *      exactly its expected number of times (the corpus exactly once — the
   *      batch filter — and a full-rebuild artifact zero times), so a
   *      Lloyd's retraining chain or a corpus re-encode is a red bar. The
-  *      scan walk is [[graft.tools.RescanAudit.scanLocations]] — never
-  *      re-inline the InMemoryFileIndex regex (ADVICE r13-1).
+  *      scan walk is [[scanLocations]] — never re-inline the
+  *      InMemoryFileIndex regex (ADVICE r13-1).
   */
 object StaleStructureContract extends org.scalatest.Assertions {
+
+  /** Every parquet scan location in a physical-plan string — ONE definition
+    * of the walk, shared by this contract's plan-shape leg and
+    * PlanAuditSpec's rescan pin, so the two can never count different
+    * things.
+    */
+  def scanLocations(plan: String): Seq[String] = {
+    val loc = """InMemoryFileIndex\(\d+ paths?\)\[([^\]]+)""".r
+    loc.findAllMatchIn(plan).map(_.group(1)).toSeq
+  }
 
   /** Collect a frame into key → value-row map: `keyCols` form the key, the
     * remaining columns the value — the entry-by-entry representation the
@@ -89,7 +99,7 @@ object StaleStructureContract extends org.scalatest.Assertions {
       s"$label: the landing batch must be missing from the stale structure " +
         s"(stale mass $staleSum, maintained $maintainedSum)")
     // (c) plan shape: exact scan counts per named table.
-    val locs = graft.tools.RescanAudit.scanLocations(gatePlan)
+    val locs = scanLocations(gatePlan)
     scanCounts.foreach { case (file, want) =>
       val got = locs.count(_.contains(file))
       assert(got == want,

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StaleStructureContractSpec extends AnyFunSuite {
 
-  // One scan of the corpus, as RescanAudit's InMemoryFileIndex walk sees it.
+  // One scan of the corpus, as the scanLocations InMemoryFileIndex walk sees it.
   private val onePlan =
     "Scan parquet [v] InMemoryFileIndex(1 paths)[file:/tmp/x/embeddings.parquet]"
   private def ok(

@@ -95,6 +95,7 @@ class JobSpecSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(base.copy(numOutputs = 0).validate().isLeft)
     assert(base.copy(mapKilobytes = 0).validate().isLeft)
     assert(base.copy(userId = "").validate().isLeft)
+    assert(base.copy(outputDir = "").validate() == Left("output_dir must be non-empty"))
   }
   test("rejects unreadable input file") {
     assert(base.copy(inputFiles = Seq("/nonexistent/x.txt")).validate().isLeft)
@@ -208,6 +209,19 @@ class WordCountJobSpec extends SparkSpec {
       assert(combined == plain, s"R=$r: combining output differs")
       assert(flushed == plain, s"R=$r: output with a flushing buffer differs")
     }
+  }
+
+  test("a session maxRecordsPerFile does not split a reduce partition's result file") {
+    val key = "spark.sql.files.maxRecordsPerFile"
+    val r = 4
+    val plain = bytes(runTask(WordCount, "wcplain", corpus, r), "wcplain", r)
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "2")
+    try {
+      val capped = bytes(runTask(WordCount, "wccapped", corpus, r), "wccapped", r)
+      assert(plain.forall(_.count(_ == '\n') > 2), "every result file must hold more than two lines")
+      assert(capped == plain, "result files differ under a session maxRecordsPerFile")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("the map phase of a combinable task is one MapSideCombine stage") {

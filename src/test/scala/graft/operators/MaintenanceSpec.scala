@@ -137,6 +137,28 @@ class MaintenanceSpec extends SparkSpec {
       s"expected lang in partitionFilters, got ${scan.partitionFilters}")
   }
 
+  /** The three phase builders mt_compact_partitioned composes, checked
+    * end-to-end against an independent aggregate over the ORIGINAL table.
+    */
+  test("fragment → compact → report preserves the original content") {
+    val composed = Maintenance.compactedLangReport(spark,
+      Maintenance.compactLangTree(spark, Maintenance.fragmentByLang(spark, sf())))
+      .collect().toSeq
+    val direct = Relational.t(spark, sf(), "documents")
+      .filter(col("lang").isin("en", "zh"))
+      .groupBy("lang")
+      .agg(
+        count(lit(1)).as("n_docs"),
+        sum(col("n_chars")).as("total_chars"),
+        min(col("doc_id")).as("min_doc_id"),
+        max(col("doc_id")).as("max_doc_id"))
+      .orderBy("lang")
+      .collect().toSeq
+    assert(composed.nonEmpty)
+    assert(composed == direct,
+      "fragment → compact → report no longer preserves the original content")
+  }
+
   test("partitioned compact on a SKEWED tree does not shatter small partitions") {
     val src = Relational.t(spark, sf(), "documents")
     val frag = java.nio.file.Files.createTempDirectory("mt-skew-frag").toString

@@ -144,6 +144,15 @@ class MultimodalSpec extends SparkSpec {
     assert(got == brute, s"banding lost or invented pairs: extra ${got -- brute}, missing ${brute -- got}")
   }
 
+  test("every near-dup pair's ids carry a row of the decode+dHash frame") {
+    val hashFrame = Multimodal.phashFrame(spark, sf())
+    val ids = hashFrame.select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(ids.nonEmpty, "the decode+dHash stage produced no hashes")
+    val pairs = Multimodal.queries("mm_phash_neardup")(spark, sf()).select("doc_a", "doc_b").collect()
+    assert(pairs.forall(r => ids(r.getLong(0)) && ids(r.getLong(1))),
+      "a near-dup pair references an id absent from the hash stage")
+  }
+
   test("silence-run kernel matches a closed-form recompute, including a run ending at EOF") {
     // Drive the REAL decode path for several fixture geometries (mono and
     // stereo, all four frame-count residues) and compare against a direct

@@ -87,6 +87,21 @@ class SpatialSpec extends SparkSpec {
     got.foreach { case (cid, nc, _) => assert(cores(cid) && nc >= 1) }
   }
 
+  test("dbscan stages: core pairs <= pairs / 2; CC labels = core endpoints") {
+    // Scale-robust invariants (at sf0.001 the core graph can be EMPTY):
+    // a < b halves the directed pair set, and the CC stage labels exactly
+    // the distinct endpoints of the core graph, no more, no fewer.
+    val pairs = Spatial.pairStore(spark, sf()).select("a", "b").count()
+    val corePairs = Spatial.dbscanCorePairs(spark, sf())
+    assert(corePairs.count() <= pairs / 2,
+      "more core-core edges than undirected radius pairs")
+    val endpoints = corePairs.select("doc_a")
+      .union(corePairs.select("doc_b")).distinct().count()
+    val cc = Spatial.geoComponents(corePairs).count()
+    assert(cc == endpoints,
+      s"the CC stage labeled $cc nodes; the core graph has $endpoints endpoints")
+  }
+
   test("salted neighborhood join: identical pairs, hot cell spread r ways") {
     import spark.implicits._
     // Planted urban skew: 240 points packed into a 200×200 corner of cell
